@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
@@ -72,9 +73,10 @@ import org.apache.spark.sql.SparkSession
   * drifted, it refuses to overwrite an existing "ok"-verdict
   * BENCH_FULL and lands in BENCH_FULL_DRIFTED.json instead, keeping
   * the clean committed record authoritative. The artifact also splits
-  * the headline into `totals.batch` / `totals.streaming`: the 13
-  * parity rows re-run micro-batch replay machinery per pass by
-  * design, a fixed cost that otherwise buries the batch signal.
+  * the headline into `totals.batch` / `totals.streaming`: the
+  * `Streaming`-tagged parity rows re-run micro-batch replay machinery
+  * per pass by design, a fixed cost that otherwise buries the batch
+  * signal.
   */
 object Bench {
   /** nearest ancestor of cwd carrying build.sbt — anchors the
@@ -222,12 +224,6 @@ object Bench {
   private[graft] def refuseOverwrite(existing: Option[String], freshVerdict: String): Boolean =
     freshVerdict == "drifted" && existing.exists(_.contains("\"verdict\":\"ok\""))
 
-  /** batch/streaming suite split: the 13 `stream_*_parity` rows replay
-    * real micro-batch machinery per pass BY DESIGN (the honest cost of
-    * a streaming correctness gate), which buries the batch engine's
-    * signal in the headline total — report both. */
-  private[graft] def isStreamingRow(name: String): Boolean = name.startsWith("stream_")
-
   /** Is a fresh median a cross-window contamination suspect? Only
     * multi-second rows qualify (the perf taxonomy's unit of concern —
     * a 0.1 s job-floor row tripping 2.5× on absolute jitter would make
@@ -236,9 +232,27 @@ object Bench {
   private[graft] def crossWindowSuspect(freshMedian: Double, trailing: Double): Boolean =
     freshMedian >= 1.0 && freshMedian > trailing * 2.5
 
+  /** The end-of-window suspect retry's sampling loop: takes up to `max`
+    * extra samples while `more(samplesSoFar)` holds. A non-fatal sample
+    * failure ends the retry: it is logged to stderr with the row and
+    * the exception class, and the samples taken so far are kept. Fatal
+    * errors and interrupts propagate. */
+  private[graft] def suspectRetry(row: String, max: Int)(more: Seq[Double] => Boolean)
+                                 (sample: () => Double): Seq[Double] = {
+    val extra = scala.collection.mutable.ArrayBuffer.empty[Double]
+    try {
+      while (extra.size < max && more(extra.toSeq)) extra += sample()
+    } catch {
+      case NonFatal(e) =>
+        graft.util.CacheRegistry.releaseAll()
+        Console.err.println(s"[bench] suspect retry: $row sample failed with " +
+          s"${e.getClass.getSimpleName}; keeping ${extra.size} retry sample(s)")
+    }
+    extra.toSeq
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt.max(1)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -255,15 +269,17 @@ object Bench {
     val tStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - tStart) / 1e9
     def budgetFrac: Double = if (budget <= 0) 0.0 else elapsed / budget
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val all = (SparkEntry.queries ++ SparkEntry.benchExtras)
+    val spark = GraftSession.forMain("graft-bench", "4")
+    val all = Catalog.builds(Catalog.Tag.Bench)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    val streaming = Catalog.tagged(Catalog.Tag.Streaming).map(_.name).toSet
+    def sample(fn: Catalog.Build): Double = {
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).count()
+      val sec = (System.nanoTime() - t0) / 1e9
+      graft.util.CacheRegistry.releaseAll()
+      sec
+    }
     // cross-window guard input: what this suite historically costs at
     // this sf dir (empty on a fresh repo or unreadable history)
     val trailing: Map[String, Double] = try {
@@ -338,15 +354,8 @@ object Bench {
     val degraded = scala.collection.mutable.LinkedHashSet.empty[String]
     def measureWindow(): Map[String, Either[String, Seq[Double]]] = all.map { case (name, fn) =>
       val r = try {
-        def sample(): Double = {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          graft.util.CacheRegistry.releaseAll()
-          sec
-        }
         if (warmup && !warmed.contains(name) && budgetFrac < 0.8) {
-          sample() // dropped: per-row fallback warm (stable tier + truncated)
+          sample(fn) // dropped: per-row fallback warm (stable tier + truncated)
           warmed += name
         }
         val fullTier = isFullTier(name)
@@ -355,7 +364,7 @@ object Bench {
           else if (!fullTier) 1 // stable tier: one probe, escalation below
           else if (budgetFrac > 0.6) { degraded += name; math.max(1, passes - 1) }
           else passes
-        val samples = scala.collection.mutable.ArrayBuffer.fill(rowPasses)(sample())
+        val samples = scala.collection.mutable.ArrayBuffer.fill(rowPasses)(sample(fn))
         // stable-tier escalation: a probe disagreeing with its trailing
         // median by >1.25× re-runs at full passes IMMEDIATELY (fresh-JVM
         // attribution is the round-close tool's job; same-window rerun
@@ -367,14 +376,14 @@ object Bench {
         if (!fullTier && trailing.get(name).exists(h => samples.head > h * 1.25)) {
           if (budgetFrac < 0.8) {
             escalated += name
-            while (samples.size < passes) samples += sample()
+            while (samples.size < passes) samples += sample(fn)
           } else degraded += name
         }
         // contention retry: identical plan, additive noise ⇒ resample
         // until the spread settles or the extra budget (2×passes) runs out
         while (samples.max / samples.min > 2.0 && samples.size < passes * 3 &&
             budgetFrac < 0.7 && (fullTier || escalated.contains(name)))
-          samples += sample()
+          samples += sample(fn)
         // cross-window contamination retry: a CONSISTENTLY slow window
         // (all samples slow together) passes the spread check — compare
         // against the trailing history median and keep resampling; if
@@ -383,7 +392,7 @@ object Bench {
         trailing.get(name).foreach { hist =>
           while (crossWindowSuspect(robustMedian(samples.toSeq, passes), hist) &&
               samples.size < passes * 5 && budgetFrac < 0.7)
-            samples += sample()
+            samples += sample(fn)
         }
         Right(samples.toSeq): Either[String, Seq[Double]]
       } catch {
@@ -449,27 +458,18 @@ object Bench {
       case (k, Right(ts))
           if trailing.get(k).exists(h =>
             crossWindowSuspect(robustMedian(ts, passes), h)) && budgetFrac < 0.9 =>
-        def sample(): Double = {
-          val t0 = System.nanoTime()
-          all(k)(spark, sfDir).count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          graft.util.CacheRegistry.releaseAll()
-          sec
-        }
-        val extra = scala.collection.mutable.ArrayBuffer.empty[Double]
-        try {
-          while (extra.size < passes && budgetFrac < 0.95 &&
-              crossWindowSuspect(robustMedian(ts ++ extra.toSeq, passes), trailing(k)))
-            extra += sample()
-        } catch { case _: Throwable => graft.util.CacheRegistry.releaseAll() }
+        val extra = suspectRetry(k, passes) { more =>
+          budgetFrac < 0.95 &&
+            crossWindowSuspect(robustMedian(ts ++ more, passes), trailing(k))
+        }(() => sample(all(k)))
         if (extra.nonEmpty) {
           suspectRetried(k) = extra.size
           Console.err.println(f"[bench] suspect retry: $k%s took ${extra.size}%d " +
             f"end-of-window sample(s); median ${robustMedian(ts, passes)}%.2f -> " +
-            f"${robustMedian(ts ++ extra.toSeq, passes)}%.2f s " +
+            f"${robustMedian(ts ++ extra, passes)}%.2f s " +
             f"(trailing ${trailing(k)}%.2f)")
         }
-        k -> (Right(ts ++ extra.toSeq): Either[String, Seq[Double]])
+        k -> (Right(ts ++ extra): Either[String, Seq[Double]])
       case kv => kv
     }
     val suspects = results.collect {
@@ -508,7 +508,7 @@ object Bench {
     // replay machinery is a fixed per-pass cost that buries the batch
     // signal — both suite totals are first-class in the artifact
     val streamingTotal = results.collect {
-      case (k, Right(ts)) if isStreamingRow(k) => robustMedian(ts, passes)
+      case (k, Right(ts)) if streaming(k) => robustMedian(ts, passes)
     }.sum
     val totalsJson =
       s"""{"batch":${total - streamingTotal},"streaming":$streamingTotal}"""

@@ -1,22 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench/inspect a single query: `runMain graft.BenchOne <name> [explain]`.
   * Uses SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS like Bench. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fn = (SparkEntry.queries ++ SparkEntry.benchExtras)(name)
+    val spark = GraftSession.forMain("graft-bench-one", "32")
+    val fn = Catalog(name).build
     if (args.contains("explain")) fn(spark, sfDir).explain("formatted")
     (1 to 3).foreach { i =>
       val t0 = System.nanoTime()

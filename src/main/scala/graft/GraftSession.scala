@@ -42,6 +42,22 @@ object GraftSession {
     spark
   }
 
+  /** The session a graft main runs on: `local[SPARK_GRAFT_CPUS]` (default
+    * `defaultCpus`) with one shuffle partition per core, UTC, no UI,
+    * graft's conf set ([[tune]]) and WARN logging. */
+  def forMain(appName: String, defaultCpus: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+    val spark = tune(SparkSession.builder()
+      .appName(appName)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Apply graft's conf set to an externally-built session builder. */
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     b.withExtensions(new GraftExtensions)

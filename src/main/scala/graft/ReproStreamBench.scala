@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import scala.jdk.CollectionConverters._
 
@@ -13,15 +12,8 @@ import scala.jdk.CollectionConverters._
 object ReproStreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "8").toInt
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain("graft-repro-stream-bench", "32")
 
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -37,7 +29,7 @@ object ReproStreamBench {
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
 
     val target = args.headOption.getOrElse("stream_window_parity")
-    val all = SparkEntry.queries ++ SparkEntry.benchExtras
+    val all = Catalog.builds(Catalog.Tag.Bench)
     val warm = if (args.length > 1 && args(1) == "full") all.keys.toSeq else Seq(target)
     warm.foreach { n =>
       val t0 = System.nanoTime()

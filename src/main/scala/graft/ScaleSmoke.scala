@@ -31,6 +31,7 @@ import org.apache.spark.sql.functions._
   *    sessionization and stateful-stream state size;
   *  - customer: key remap only (geocode candidates are per-row).
   *
+  * The smoke set is the catalog's `Smoke` rows, in catalog order.
   * Remaining tables pass through unreplicated (the smoke set never
   * times them). Timings: per query, one untimed warmup then the
   * median of SPARK_GRAFT_SF1_PASSES (default 2) passes, at BOTH
@@ -42,73 +43,6 @@ object ScaleSmoke {
 
   /** disjoint key range per replica — far above any sf0.1 key. */
   private val KeySpan = 1000000000L
-
-  /** the judge's 10 most-expensive-operator set, by registry name,
-    * plus the r10 additions whose cost is corpus-scale (the ngram
-    * explode, the IVF-PQ index+search chain, the iterative PageRank
-    * over the kNN graph, the two-corpus KMV sketch scan, the WARC
-    * land-and-ingest round trip, and the late-r10 curation set: the
-    * CCNet LM+quantile split, the DoReMi per-source LM means, the
-    * full-corpus cluster assignment, and the two-version PSI scan). */
-  val SmokeQueries: Seq[String] = Seq(
-    "dedup_minhash_prod", "dup_span_detect", "semantic_dedup",
-    "bm25_topk", "quality_classifier", "image_phash_dedup",
-    "geocode_candidates", "cdc_chunk_dedup", "knn_graph",
-    "stream_dedup_parity", "topk_ngrams", "ivfpq_topk",
-    "pagerank_centrality", "corpus_overlap_kmv", "warc_ingest",
-    "ccnet_buckets", "mixture_reweight", "cluster_balance",
-    "corpus_drift",
-    // r12 additions (r10 verdict task 6): the contamination scan pair,
-    // the retrieval-eval join ladder, the boilerplate extractor, the
-    // crawl funnel e2e, rank fusion, the index append path, and
-    // PageRank at DOUBLE the demo's rounds — lineage-checkpoint cost
-    // scales with rounds, the one knob the 10× replication alone
-    // doesn't stress
-    "contamination_spans", "contamination_scrub", "retrieval_eval",
-    "html_main_content", "crawl_ingest_e2e", "rrf_fusion",
-    "bm25_index_append", "pagerank_2x_iters",
-    // r12 additions: the prefix-filtered exact similarity join, the
-    // two-phase budget cumsum, and bitext mining in its LSH-candidate
-    // form — the exhaustive bitext_mine demo is quadratic BY DESIGN
-    // (a candidate-slice operator; its doc says swap in ANN at scale),
-    // so the smoke stresses the form that is claimed to scale
-    "setsim_join", "budget_select", "bitext_mine_ann",
-    // the asymmetric containment join stresses the full-token B side
-    // (the one prefix-filtered join whose posting lists are unpruned)
-    "contain_join",
-    // r13 additions: the three corpus-scale new rows — takedown rides
-    // the full minhash+CC chain (replicated docs multiply near-dup
-    // clusters), mink rides the bigram LM + per-doc rank cut, and the
-    // split-leakage audit scans every k-gram window across the split
-    "takedown_propagate", "mink_score", "split_leakage",
-    // r15: A3's decision-only form — the payload-independence claim
-    // needs a measured point (cost must track ROWS, never row width)
-    "dedup_first_key_hash",
-    // r15: the graph family's second iterative member (same per-round
-    // node-scale-shuffle claim as pagerank — measured, not inherited)
-    "label_propagation",
-    // r15 late additions: the novelty gate scans every k-gram window
-    // of both corpus halves (the C122 claim is hash-dimension-join
-    // linearity); its D15 sequential-admission form adds the archive
-    // join per micro-batch; pref-pair prep is two quality scans + the
-    // prompt-dedup window
-    "ngram_novelty", "stream_novelty_admit_parity", "pref_pair_prep",
-    // r16 (VERDICT item 2): scale-prove the r15 structural wins — the
-    // fused Hamming recall sweep and the xxhash64-keyed truth self-join
-    "lsh_recall_curve", "minhash_lsh_eval",
-    // r16 (VERDICT item 5): the LM family rides corpus-bigram-scale
-    // exchanges; the fixed-width-key change is gated on THIS smoke
-    // (mink_score, the third member, is already in the set)
-    "bigram_lm_score", "kn_lm_score")
-
-  /** smoke-only variants that exist to stress a knob the registry
-    * demos fix (SparkEntry rows must stay oracle-stable): PageRank at
-    * 12 rounds = 2× the C68 demo, same mutual-kNN graph. */
-  val SmokeExtras: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pagerank_2x_iters" -> ((s: SparkSession, dir: String) =>
-      graft.operators.TextDemos.pagerankOverKnn(s, dir, iters = 12)),
-    "bitext_mine_ann" -> ((s: SparkSession, dir: String) =>
-      graft.operators.TextDemos.bitextMineAnn(s, dir)))
 
   private def replicate(factor: Int)(one: Int => DataFrame): DataFrame =
     (0 until factor).map(one).reduce(_ unionByName _)
@@ -188,21 +122,14 @@ object ScaleSmoke {
     val outDir = args.lift(1).getOrElse(s"${Bench.repoRoot}/target/scale-sf1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SF1_FACTOR", "10").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_SF1_PASSES", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain("graft-scale-smoke", "32")
 
     synthesize(spark, srcDir, outDir, factor)
 
-    val registry = SparkEntry.queries ++ SparkEntry.benchExtras ++ SmokeExtras
-    val rows = SmokeQueries.filter(q => only.forall(_.contains(q))).map { name =>
-      val fn = registry(name)
+    val smoke = Catalog.tagged(Catalog.Tag.Smoke).filter(r => only.forall(_.contains(r.name)))
+    val rows = smoke.map { row =>
+      val (name, fn) = (row.name, row.scaleBuild)
       Console.err.println(s"[scale-smoke] $name @ sf0.1 ...")
       val base = timeQuery(spark, srcDir, fn, passes)
       Console.err.println(s"[scale-smoke] $name @ sf1 ...")

@@ -169,7 +169,7 @@ object StreamParity {
         .outputMode("update").trigger(Trigger.AvailableNow()).start()
       awaitRecorded(q)
     }
-    spark.read.parquet(s"$target/out")
+    readUpdateLog(spark, s"$target/out")
       .groupBy(col("bucket"), col("ngram"))
       .agg(max_by(struct(col("occ"), col("docs"), col("deleted")),
         col("seq")).as("f"))
@@ -178,6 +178,18 @@ object StreamParity {
         col("f.docs").as("n_docs"))
       .orderBy(col("n_occurrences").desc, col("ngram"))
       .limit(25)
+  }
+
+  /** D7's parquet update log. A stream that commits no batch writes no
+    * file, and a parquet read cannot infer a schema from an empty or
+    * missing directory, so an empty log reads as an empty
+    * [[EventStream.HHUpdate]] table with the encoder's schema. */
+  private[graft] def readUpdateLog(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val hasFiles = fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
+    if (hasFiles) spark.read.parquet(path)
+    else spark.emptyDataset(org.apache.spark.sql.Encoders.product[EventStream.HHUpdate]).toDF()
   }
 
   /** D8 ↔ C21: the documents table streamed through

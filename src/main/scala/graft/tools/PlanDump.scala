@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named bench rows into files —
   * feeds the committed `plans/r<N>/<row>_{before,after}.txt` evidence
   * the optimization rounds require. Run:
@@ -14,19 +12,10 @@ object PlanDump {
     val suffix = args(1)
     val rows = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.forMain("graft-plan-dump", "32")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val registry = graft.SparkEntry.queries ++ graft.SparkEntry.benchExtras ++
-      graft.ScaleSmoke.SmokeExtras
     rows.foreach { name =>
-      val df = registry(name)(spark, sfDir)
+      val df = graft.Catalog(name).scaleBuild(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       java.nio.file.Files.writeString(

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-loop floor measurement for the DISTRIBUTED GD path: wall
@@ -23,15 +22,8 @@ object RoundFloor {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt.max(1)
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.forMain("graft-round-floor", "32")
     spark.conf.set(graft.operators.Classifier.LocalTrainThresholdKey, "0")
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val label = array_contains(graft.functions.Text.wsTokens(col("text")), "key")

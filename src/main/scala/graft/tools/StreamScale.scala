@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.streaming.StreamTelemetry
 
 /** Streaming-tier scale smoke (r13 verdict task 6): the D rows had
@@ -22,14 +21,7 @@ object StreamScale {
     val outDir = args.lift(1).getOrElse(s"${graft.Bench.repoRoot}/target/scale-sf03")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SF1_FACTOR", "3").toInt
     val passes = sys.env.getOrElse("SPARK_GRAFT_SF1_PASSES", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.forMain("graft-stream-scale", "32")
 
     graft.ScaleSmoke.synthesize(spark, srcDir, outDir, factor)
 
@@ -40,10 +32,9 @@ object StreamScale {
     // the next sample's max.
     val rows = Seq("stream_dedup_state_parity", "stream_interval_join_parity",
       "stream_dedup_parity", "stream_topk_ngrams_parity")
-    val registry = graft.SparkEntry.queries ++ graft.SparkEntry.benchExtras
 
     def measure(dir: String, name: String): (Double, Long, Long) = {
-      val fn = registry(name)
+      val fn = graft.Catalog(name).build
       fn(spark, dir).count() // warmup (stages the fixture)
       graft.util.CacheRegistry.releaseAll()
       val samples = Seq.fill(passes) {

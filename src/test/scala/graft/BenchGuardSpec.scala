@@ -130,11 +130,52 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(!Bench.refuseOverwrite(okArtifact, "insufficient-history"))
   }
 
-  test("isStreamingRow splits the parity rows from the batch suite") {
-    assert(Bench.isStreamingRow("stream_window_parity"))
-    assert(Bench.isStreamingRow("stream_sft_gate_parity"))
-    assert(!Bench.isStreamingRow("q1_pricing_summary"))
-    assert(!Bench.isStreamingRow("sessionize")) // batch sessionize, not stream_
+  test("the Streaming tag splits the parity rows from the batch suite") {
+    val streaming = Catalog.tagged(Catalog.Tag.Streaming).map(_.name).toSet
+    assert(streaming == Set(
+      "stream_window_parity", "stream_upsert_parity", "stream_dedup_parity",
+      "stream_dedup_state_parity", "stream_interval_join_parity",
+      "stream_session_parity", "stream_topk_ngrams_parity",
+      "stream_contamination_parity", "stream_quality_gate_parity",
+      "stream_sft_gate_parity", "stream_mojibake_parity",
+      "stream_takedown_parity", "stream_drift_parity",
+      "stream_calibration_parity", "stream_kmv_sketch_parity",
+      "stream_novelty_admit_parity"))
+    assert(!streaming("q1_pricing_summary"))
+    assert(!streaming("sessionize")) // batch sessionize, not a replay
+  }
+
+  private def stderrOf[A](body: => A): (Either[Throwable, A], String) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val r = Console.withErr(buf)(try Right(body) catch { case t: Throwable => Left(t) })
+    (r, buf.toString("UTF-8"))
+  }
+
+  test("suspectRetry samples while the row stays suspect, up to its cap") {
+    val (r, log) = stderrOf(Bench.suspectRetry("row_a", max = 3)(_.size < 2)(() => 1.5))
+    assert(r == Right(Seq(1.5, 1.5)) && log.isEmpty)
+    val (capped, _) = stderrOf(Bench.suspectRetry("row_a", max = 3)(_ => true)(() => 1.5))
+    assert(capped == Right(Seq(1.5, 1.5, 1.5)))
+  }
+
+  test("suspectRetry: a non-fatal sample failure keeps earlier samples and logs row + class") {
+    var n = 0
+    val (r, log) = stderrOf(Bench.suspectRetry("row_b", max = 3)(_ => true) { () =>
+      n += 1
+      if (n == 2) throw new IllegalStateException("boom") else 2.0
+    })
+    assert(r == Right(Seq(2.0)))
+    assert(log.contains("row_b") && log.contains("IllegalStateException"), log)
+  }
+
+  test("suspectRetry: fatal errors and interrupts propagate") {
+    val (oom, _) = stderrOf(Bench.suspectRetry("row_c", max = 3)(_ => true)(
+      () => throw new OutOfMemoryError("test")))
+    assert(oom.left.exists(_.isInstanceOf[OutOfMemoryError]))
+    val (intr, log) = stderrOf(Bench.suspectRetry("row_c", max = 3)(_ => true)(
+      () => throw new InterruptedException("test")))
+    assert(intr.left.exists(_.isInstanceOf[InterruptedException]))
+    assert(log.isEmpty, log)
   }
 
   test("driftVerdict: uniform slow window flags; quiet window passes; probes abstain") {

@@ -355,7 +355,9 @@ class PlanShapeSpec extends SparkSpec {
     // pre-execution plan at sf0.001 — a count that moves WITHOUT an
     // intentional plan change fails here instead. After an intentional
     // change: `sbt "runMain graft.tools.PlanCounts"` prints the fresh
-    // counts; update this map in the same commit as the plan change.
+    // counts; update this map in the same commit as the plan change. A
+    // row joins the gate by its `PlanPinned` tag in Catalog plus an
+    // entry here; the two must name the same rows.
     val expected = Map(
       "pagerank_centrality"    -> ((1, 0, 0)),  // checkpointed rounds truncate the tail plan
       "centrality_gate"        -> ((2, 3, 3)),  // bars broadcast; corpus never shuffle-joins
@@ -383,10 +385,14 @@ class PlanShapeSpec extends SparkSpec {
       "sft_pack"               -> ((6, 3, 3)),   // turn window + verdict join + shard cumsum; validator tables broadcast
       "unimax_apply"           -> ((3, 1, 1)),   // ONE lang-keyed cumsum exchange + the broadcast allocation join
       "bm25_index_compact"     -> ((2, 0, 0)))   // read-back path only; compaction I/O is side-effecting at build time (priced by the C114 family ladder)
+    val pinned = Catalog.tagged(Catalog.Tag.PlanPinned)
+    assert(expected.keySet == pinned.map(_.name).toSet,
+      "the pinned map and the catalog's PlanPinned rows must name the same rows")
     val sfDir = "/root/testdata/sf0.001"
     assume(new java.io.File(sfDir).isDirectory, s"$sfDir not present")
-    graft.tools.PlanCounts.Gated.foreach { name =>
-      val df = graft.tools.PlanCounts.resolve(name)(spark, sfDir)
+    pinned.foreach { row =>
+      val name = row.name
+      val df = row.scaleBuild(spark, sfDir)
       try {
         val p = plan(df)
         val actual = (graft.tools.PlanCounts.shuffles(p),

@@ -15,7 +15,7 @@ class SparkEntrySpec extends SparkSpec {
   }
 
   test("every declared query executes at sf0.001 (bench-only paths included)") {
-    val failures = (SparkEntry.queries ++ SparkEntry.benchExtras).flatMap {
+    val failures = Catalog.builds(Catalog.Tag.Bench).flatMap {
       case (name, fn) =>
         try { fn(spark, sfDir).count(); None }
         catch { case e: Throwable => Some(s"$name: ${e.getMessage.linesIterator.next()}") }

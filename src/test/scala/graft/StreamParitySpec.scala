@@ -29,6 +29,18 @@ class StreamParitySpec extends SparkSpec {
       s"stream=${streamed.take(3)}... batch=${batch.take(3)}...")
   }
 
+  test("D7 read-back: a log with no files is an empty table with the HHUpdate schema") {
+    val schema = org.apache.spark.sql.Encoders.product[graft.streaming.EventStream.HHUpdate].schema
+    val dir = tempDir("d7_empty_log")
+    // a stream that committed zero batches never creates `out`; an
+    // existing but empty directory must read the same way
+    Seq(s"$dir/out", dir).foreach { path =>
+      val log = StreamParity.readUpdateLog(spark, path)
+      assert(log.schema == schema, path)
+      assert(log.count() == 0, path)
+    }
+  }
+
   test("D8 parity: streaming decontamination gate lands on the batch contamination check") {
     val streamed = rows(StreamParity.streamContaminationParity(spark, sfDir))
     val batch = rows(TextDemos.contaminationCheck(spark, sfDir))
